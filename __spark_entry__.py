@@ -72,6 +72,17 @@ def _clean_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _canonical_src_dst(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The canonical KG edge graph as (src, dst) — the graph queries'
+    input (pipeline/entity.canonicalize over the clean triples)."""
+    from json_ld_spark.pipeline.entity import canonicalize
+
+    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
+    return edges.select(
+        F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
+    )
+
+
 def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship extraction; deterministically ordered for the driver's
     value-hash (oracle: kernel-generated golden parquet, NULLS FIRST to
@@ -149,14 +160,8 @@ def _kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pure-python mirror over the golden edges, tools/make_golden.py) is
     bit-exact despite 10 iterations."""
     from json_ld_spark.operators.graph import pagerank_fixed_point
-    from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
-    pr = pagerank_fixed_point(
-        edges.select(
-            F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
-        )
-    )
+    pr = pagerank_fixed_point(_canonical_src_dst(spark, sf_dir))
     return pr.orderBy(F.desc("rank"), "node").limit(20)
 
 
@@ -169,14 +174,8 @@ def _kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain-Python mirror over the golden edges (tools/make_golden.py),
     bit-exact.  136 communities over 790 connected nodes at sf0.01."""
     from json_ld_spark.operators.graph import label_propagation
-    from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
-    return label_propagation(
-        edges.select(
-            F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
-        )
-    ).orderBy("node")
+    return label_propagation(_canonical_src_dst(spark, sf_dir)).orderBy("node")
 
 
 def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,15 +187,8 @@ def _kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/make_golden.write_kcore) is bit-exact.  318 of 813 nodes
     survive at sf0.01."""
     from json_ld_spark.operators.graph import kcore
-    from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
-    return kcore(
-        edges.select(
-            F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
-        ),
-        k=2,
-    ).orderBy("node")
+    return kcore(_canonical_src_dst(spark, sf_dir), k=2).orderBy("node")
 
 
 def _kg_entity_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,15 +215,9 @@ def _kg_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the identical capped statistic in plain DuckDB SQL over the
     golden edges."""
     from json_ld_spark.operators.graph import link_candidates
-    from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
     return link_candidates(
-        edges.select(
-            F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
-        ),
-        max_center_degree=64,
-        k=50,
+        _canonical_src_dst(spark, sf_dir), max_center_degree=64, k=50
     )
 
 
@@ -320,14 +306,8 @@ def _kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     golden edges — an independent formulation, so the orientation
     machinery is verified against first-principles enumeration."""
     from json_ld_spark.operators.graph import triangle_counts
-    from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
-    return triangle_counts(
-        edges.select(
-            F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
-        )
-    ).orderBy("node")
+    return triangle_counts(_canonical_src_dst(spark, sf_dir)).orderBy("node")
 
 
 def _kg_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -523,12 +503,8 @@ def _kg_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB RECURSIVE CTE over the golden edges — an independent engine's
     native reachability, not a mirror of this plan."""
     from json_ld_spark.operators.graph import khop_reachability
-    from json_ld_spark.pipeline.entity import canonicalize
 
-    _, _, edges = canonicalize(_clean_triples(spark, sf_dir), materialize=True)
-    e = edges.select(
-        F.col("src_canon").alias("src"), F.col("dst_canon").alias("dst")
-    )
+    e = _canonical_src_dst(spark, sf_dir)
     seeds = (
         e.select(F.col("src").alias("node")).distinct().orderBy("node").limit(8)
     )

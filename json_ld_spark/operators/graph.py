@@ -26,26 +26,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..pipeline.cc import simple_edges, undirected
+
 TOTAL_MASS = 10**12
 DAMP_NUM, DAMP_DEN = 85, 100
 
 
-def pagerank_fixed_point(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iters: int = 10,
-) -> DataFrame:
-    """Returns (node, rank) — integer fixed-point PageRank after
-    ``n_iters`` rounds with damping 0.85. Deterministic: integer sums are
-    associative, floor-division shares are exact, so any partitioning or
-    engine produces identical ranks."""
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+def pagerank_fixed_point(edges: DataFrame, n_iters: int = 10) -> DataFrame:
+    """Returns (node, rank) — integer fixed-point PageRank over
+    ``simple_edges(edges)`` after ``n_iters`` rounds with damping 0.85.
+    Deterministic: integer sums are associative, floor-division shares
+    are exact, so any partitioning or engine produces identical ranks."""
+    e = simple_edges(edges)
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -88,17 +80,11 @@ def pagerank_fixed_point(
     return ranks
 
 
-def khop_reachability(
-    edges: DataFrame,
-    seeds: DataFrame,
-    k: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def khop_reachability(edges: DataFrame, seeds: DataFrame, k: int) -> DataFrame:
     """Bounded multi-source BFS: every node reachable from ``seeds`` in
-    at most ``k`` directed hops, with ``dist`` = MINIMUM hop count
-    (seeds themselves at dist 0). ``seeds`` must carry one column named
-    ``node``.
+    at most ``k`` directed hops along ``edges`` (src, dst), with
+    ``dist`` = MINIMUM hop count (seeds themselves at dist 0). ``seeds``
+    must carry one column named ``node``.
 
     Level-synchronous frontier expansion — the distributed-BFS shape every
     Pregel-style system uses, as plain DataFrame ops:
@@ -123,14 +109,13 @@ def khop_reachability(
     visited), so partitioning cannot change the result — the DuckDB
     recursive-CTE oracle is bit-exact.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     visited = seeds.select("node").distinct().withColumn(
         "dist", F.lit(0).cast("int")
     ).localCheckpoint()
     frontier = visited.select("node")
     for level in range(1, k + 1):
         nxt = (
-            frontier.join(e, frontier.node == e.src)
+            frontier.join(edges, frontier.node == edges.src)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
@@ -144,12 +129,9 @@ def khop_reachability(
     return visited
 
 
-def triangle_counts(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Per-node exact triangle participation counts over the UNDIRECTED
-    simple graph induced by ``edges`` (direction collapsed, self-loops
-    and parallel edges dropped). Returns (node, n_triangles) for nodes in
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """Per-node exact triangle participation counts over
+    ``undirected(edges)``. Returns (node, n_triangles) for nodes in
     ≥1 triangle.
 
     Degree-ordered orientation — the standard bound that makes exact
@@ -169,25 +151,14 @@ def triangle_counts(
     pivot, one equi-join to close — all JVM equi-joins on single keys,
     AQE free to pick broadcast for the rank side when small.
     """
-    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).where(
-        F.col("s") != F.col("d")
-    )
-    # und feeds deg (twice via the union) and ranked; oriented feeds both
-    # wedge sides and the closer. Without materialization each reference
+    # sym (checkpointed) feeds deg and und; oriented feeds both wedge
+    # sides and the closer. Without materialization each reference
     # re-executes the ENTIRE upstream lineage (with a KG-extraction input
-    # that was 63 exchanges for one count) — localCheckpoint, the same
-    # lineage-cut discipline as the CC/PageRank/BFS loops.
-    und = (
-        e.select(F.least("s", "d").alias("a"), F.greatest("s", "d").alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .union(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("dg"))
-    )
+    # that was 63 exchanges for one count) — the same lineage-cut
+    # discipline as the CC/PageRank/BFS loops.
+    sym = undirected(edges)
+    und = sym.where(F.col("src") < F.col("dst")).toDF("a", "b")
+    deg = sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("dg"))
     ranked = (
         und.join(deg.withColumnRenamed("node", "a"), "a")
         .withColumnRenamed("dg", "da")
@@ -314,19 +285,14 @@ def comention_pairs(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iters: int = 5,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, n_iters: int = 5) -> DataFrame:
     """Community detection by synchronous label propagation (Raghavan et
     al. 2007, the LPA variant GraphX ships): returns (node, community).
 
     Every node starts labeled with its own id; each round every node
-    adopts the most frequent label among its NEIGHBORS (undirected simple
-    graph — direction, self-loops and parallel edges collapse), ties
-    broken by the lexicographically least label.  The synchronous update
+    adopts the most frequent label among its NEIGHBORS in
+    ``undirected(edges)``, ties broken by the lexicographically least
+    label.  The synchronous update
     + total tie order makes the result a pure function of (graph,
     n_iters): bit-identical on any partitioning, any engine — so a
     plain-Python mirror can serve as the oracle.  (Run-to-convergence
@@ -342,23 +308,14 @@ def label_propagation(
     whole-neighborhood sort.  localCheckpoint per round cuts the
     iterative lineage like the CC/PageRank loops.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-    )
-    und = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = und.select(F.col("a").alias("node")).distinct().withColumn(
+    und = undirected(edges)
+    labels = und.select(F.col("src").alias("node")).distinct().withColumn(
         "community", F.col("node")
     )
     for _ in range(n_iters):
         nbr = und.join(
-            labels, und.b == labels.node, "inner"
-        ).select(F.col("a").alias("node"), "community")
+            labels, und.dst == labels.node, "inner"
+        ).select(F.col("src").alias("node"), "community")
         counted = nbr.groupBy("node", "community").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -378,14 +335,8 @@ def label_propagation(
     return labels
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 2,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 100,
-) -> DataFrame:
-    """Maximal k-core of the undirected simple graph: returns
+def kcore(edges: DataFrame, k: int = 2, max_rounds: int = 100) -> DataFrame:
+    """Maximal k-core of ``undirected(edges)``: returns
     (node, core_degree) for every node of the unique maximal subgraph in
     which all degrees are ≥ k — the standard dense-region filter before
     expensive per-node analytics (and the classic noise cut for
@@ -408,38 +359,24 @@ def kcore(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-    )
-    alive = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    alive = undirected(edges)
     prev_nodes = -1
     for _ in range(max_rounds):
         keep = (
-            alive.groupBy("a")
+            alive.groupBy("src")
             .agg(F.count(F.lit(1)).alias("deg"))
             .where(F.col("deg") >= k)
-            .select("a")
             .localCheckpoint()
         )
         n_nodes = keep.count()
         if n_nodes == prev_nodes:
-            return (
-                alive.groupBy("a")
-                .agg(F.count(F.lit(1)).alias("core_degree"))
-                .select(F.col("a").alias("node"), "core_degree")
-            )
+            # the survivors are the previous round's, so every node of
+            # ``alive`` is in ``keep`` and its degree there is final
+            return keep.toDF("node", "core_degree")
         prev_nodes = n_nodes
         alive = (
-            alive.join(keep, "a", "left_semi")
-            .join(
-                keep.select(F.col("a").alias("b")), "b", "left_semi"
-            )
+            alive.join(keep, "src", "left_semi")
+            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
             .localCheckpoint()
         )
     raise RuntimeError(
@@ -448,17 +385,13 @@ def kcore(
 
 
 def link_candidates(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_center_degree: int = 64,
-    k: int = 50,
+    edges: DataFrame, max_center_degree: int = 64, k: int = 50
 ) -> DataFrame:
-    """Link prediction by common neighbors: the top-``k`` NON-adjacent
-    node pairs ranked by shared-neighbor count (entity-resolution's "are
-    these two the same thing?" shortlist, and a KG-completion candidate
-    generator).  Returns (a, b, n_common, deg_a, deg_b, jaccard_s) with
-    ``jaccard_s = (n_common * 10^6) div (deg_a + deg_b - n_common)`` —
+    """Link prediction by common neighbors in ``undirected(edges)``: the
+    top-``k`` NON-adjacent node pairs ranked by shared-neighbor count
+    (entity-resolution's "are these two the same thing?" shortlist, and a
+    KG-completion candidate generator).  Returns (a, b, n_common, deg_a,
+    deg_b, jaccard_s) with ``jaccard_s = (n_common * 10^6) div (deg_a + deg_b - n_common)`` —
     scaled-integer Jaccard over the neighbor sets, exact in any engine.
 
     Hub guard (the wedge-explosion killer): common neighbors are counted
@@ -478,16 +411,7 @@ def link_candidates(
     degrees → TakeOrdered.  Tie-break (score, n_common) DESC then (a, b)
     ASC makes the top-k unique.
     """
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
-    )
-    und = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint()
-    )
+    und = undirected(edges).toDF("a", "b")
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     centers = deg.where(F.col("deg") <= max_center_degree).select(
         F.col("a").alias("c")

@@ -31,6 +31,38 @@ def _symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
+def simple_edges(edges: DataFrame) -> DataFrame:
+    """The directed simple graph of an edge table: its (src, dst) pairs
+    with self-loops, parallel edges and null endpoints dropped
+    (``src != dst`` is null, hence false, when either side is null).
+
+    This is the one edge normal form every graph operator starts from.
+    The result is materialized with ``localCheckpoint``: the loops read
+    it every round, and the checkpoint cuts the input's lineage so each
+    read is a scan.  Plan: one shuffle (the ``distinct``) and one
+    checkpoint, i.e. two Spark jobs, since AQE runs the shuffle's map
+    stage as a job of its own (``tests/test_plan_properties.py`` pins
+    this budget).
+    """
+    return (
+        edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def undirected(edges: DataFrame) -> DataFrame:
+    """The undirected simple graph of an edge table, as both directions
+    (src, dst) and (dst, src) of every edge of ``simple_edges(edges)``.
+    Direction, self-loops, parallel edges and null endpoints collapse;
+    a node's degree is its row count as ``src``.  Same plan and job
+    budget as ``simple_edges``.
+    """
+    e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
+    return _symmetrize(e).distinct().localCheckpoint()
+
+
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u: connect strictly-larger neighbors to min(N(u) ∪ u)."""
     nbr = _symmetrize(edges)
@@ -60,28 +92,23 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iterations: int = 25,
+    edges: DataFrame, max_iterations: int = 25
 ) -> DataFrame:
-    """Return (id: string, component: string); ``component`` is the
-    lexicographically-smallest member of the node's component.
+    """Return (id: string, component: string) for every endpoint of
+    ``edges`` (src, dst); ``component`` is the lexicographically-smallest
+    member of the node's component in ``undirected(edges)``.
 
-    ``edges`` is treated as undirected; self-loops are dropped.
+    Raises ``RuntimeError`` when the labelling has not converged within
+    ``max_iterations`` rounds, instead of returning a wrong one.
     """
     ids = (
-        edges.select(F.col(src).alias("id"))
-        .union(edges.select(F.col(dst).alias("id")))
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
         .distinct()
         .localCheckpoint()
     )
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = simple_edges(edges)
+
     def _fingerprint(df: DataFrame):
         """(count, xor-of-row-hashes) — one cheap aggregate job."""
         row = df.select(
@@ -101,6 +128,10 @@ def connected_components(
             e = e2
             break
         e, fp = e2, fp2
+    else:
+        raise RuntimeError(
+            f"connected components did not converge within {max_iterations} rounds"
+        )
     # at convergence the graph is a union of stars rooted at component minima
     membership = (
         _symmetrize(e)

@@ -361,3 +361,33 @@ def test_link_candidates_deterministic_topk(spark):
     a = [tuple(r) for r in link_candidates(edges, k=5).collect()]
     b = [tuple(r) for r in link_candidates(edges.repartition(7), k=5).collect()]
     assert a == b and len(a) == 5
+
+
+# ------------------------------------------------------- edge normal form
+
+
+@pytest.mark.parametrize(
+    "op, kwargs, dup",
+    [
+        # PageRank is directed: a reversed edge is a new edge there, so
+        # its duplicate row repeats an edge as given
+        ("pagerank_fixed_point", {"n_iters": 5}, ("c", "a")),
+        ("label_propagation", {"n_iters": 3}, ("a", "c")),
+        ("kcore", {"k": 2}, ("a", "c")),
+        ("link_candidates", {"k": 10}, ("a", "c")),
+        ("triangle_counts", {}, ("a", "c")),
+    ],
+)
+def test_edge_normal_form_ignores_noise_rows(spark, op, kwargs, dup):
+    from json_ld_spark.operators import graph
+
+    # triangles abc and abd; c and d share neighbours a and b
+    base = [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"), ("d", "b")]
+    noise = [(None, "a"), ("b", None), (None, None), ("c", "c"), dup]
+
+    def rows(pairs):
+        e = spark.createDataFrame(pairs, "src string, dst string")
+        return sorted(map(tuple, getattr(graph, op)(e, **kwargs).collect()))
+
+    want = rows(base)
+    assert want and rows(base + noise) == want

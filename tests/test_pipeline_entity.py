@@ -37,6 +37,15 @@ def test_connected_components_chain_and_star(spark):
     assert len(out) == 21
 
 
+def test_connected_components_raises_when_not_converged(spark):
+    # a 1,000-node path with sorted ids needs 11 large/small-star rounds;
+    # stopping at 5 must not return the half-merged labelling
+    ids = [f"n{i:04d}" for i in range(1000)]
+    edges = spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
+    with pytest.raises(RuntimeError, match="did not converge within 5 rounds"):
+        connected_components(edges, max_iterations=5)
+
+
 @pytest.fixture(scope="module")
 def triples(spark, sf_dir):
     return extract_triples(synth_transcripts(spark, sf_dir)).cache()

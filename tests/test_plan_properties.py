@@ -77,3 +77,25 @@ def test_pack_chunks_single_shuffle_no_python(spark, sf_dir, entrymod):
     assert "MapInPandas" not in plan and "EvalPython" not in plan, plan
     # one shuffle by pack_group + the output sort — nothing else
     assert len(re.findall(r"\bExchange\b", plan)) <= 2, plan
+
+
+@pytest.mark.parametrize("helper", ["simple_edges", "undirected"])
+def test_edge_normal_form_job_budget(spark, helper):
+    """Every graph operator starts from one of these helpers, so a job
+    added here is a job added to every operator.  The budget is one
+    shuffle (the distinct) and one checkpoint: with AQE on, the shuffle's
+    map stage runs as a job of its own, so that is two jobs."""
+    from json_ld_spark.pipeline import cc
+
+    sc = spark.sparkContext
+    e = spark.createDataFrame(
+        [("a", "b"), ("b", "a"), ("a", "b"), ("c", "c"), (None, "a")],
+        "src string, dst string",
+    )
+    group = f"edge-normal-form-{helper}"
+    sc.setJobGroup(group, helper)
+    try:
+        getattr(cc, helper)(e)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2

@@ -72,6 +72,9 @@ class ErrorCode(str, enum.Enum):
     # (src/error.rs has no framing codes); used by kernel/frame.py
     INVALID_FRAME = "invalid frame"
     INVALID_EMBED_VALUE = "invalid @embed value"
+    # --- extensions of this pipeline, in no W3C registry: quarantine codes
+    # for documents the processor cannot take (pipeline/extract.py)
+    DOCUMENT_TOO_DEEP = "document too deep"
 
 
 class JsonLdError(Exception):

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
 from ..contexts import ContextDict
 from ..kernel import (
     Context,
+    ErrorCode,
     JsonLdError,
     ProcessorOptions,
     expand_document,
@@ -85,6 +86,11 @@ def iter_turn_documents(text, tool) -> list[str]:
     if isinstance(text, str) and "<jsonld>" in text:
         raws.extend(_INLINE_RE.findall(text))
     return raws
+
+
+def _quarantine(code: ErrorCode) -> tuple:
+    """The partial row (after conv_id/turn_idx) of a failed document."""
+    return (None,) * 8 + (code.value,)
 
 
 class TurnExpander:
@@ -143,14 +149,17 @@ class TurnExpander:
             return cached
         self.cache_stats["doc_misses"] += 1
         out: list[tuple] = []
+        # RecursionError: a document nested deeper than the interpreter's
+        # stack overflows json.loads (~2,000 levels) or the recursive
+        # expansion walk (~600) — quarantine it, never abort the task
         try:
             doc = json.loads(raw)
         except (json.JSONDecodeError, ValueError):
             doc = None
-            out.append(
-                (None, None, None, None, None, None, None, None,
-                 "loading document failed")
-            )
+            out.append(_quarantine(ErrorCode.LOADING_DOCUMENT_FAILED))
+        except RecursionError:
+            doc = None
+            out.append(_quarantine(ErrorCode.DOCUMENT_TOO_DEEP))
         if doc is not None:
             try:
                 ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
@@ -168,10 +177,9 @@ class TurnExpander:
                          t["graph"], None)
                     )
             except JsonLdError as e:
-                out = [
-                    (None, None, None, None, None, None, None, None,
-                     e.code.value)
-                ]
+                out = [_quarantine(e.code)]
+            except RecursionError:
+                out = [_quarantine(ErrorCode.DOCUMENT_TOO_DEEP)]
         result = tuple(out)
         if len(self._doc_cache) >= self.DOC_CACHE_MAX:
             # FIFO eviction: drop the oldest insertion (dict is ordered)

@@ -22,9 +22,10 @@ that is the difference between 1 pass and 32):
 2. ONE grouped metrics job aggregates clean/error/checksum for every
    written bucket directory (round 2 ran 3 jobs per bucket,
    driver-serially — the job-launch-latency wall at 10^3+ buckets).
-3. A driver-side loop then writes only the tiny atomic manifest rows. The
-   manifest row remains the commit point, so resume granularity is still
-   per-bucket: a crash mid-loop leaves later buckets pending, and the
+3. A driver-side loop then commits each bucket's one-row manifest entry as
+   a driver-local Arrow write to a temp file followed by a rename — no
+   Spark job. The rename is the commit point, so resume granularity is
+   still per-bucket: a crash mid-loop leaves later buckets pending, and the
    re-run's dynamic overwrite of those partitions is idempotent.
 """
 
@@ -130,7 +131,7 @@ def run_extraction_job(
     input_rows = {b: observed[f"b{b}"] or 0 for b in pending}
 
     # ONE grouped metrics job over every written bucket directory, then a
-    # driver loop that only writes the tiny atomic manifest rows — commit
+    # driver loop of Arrow write + rename manifest commits (no Spark) — commit
     # granularity (and the crash window fail_after_bucket simulates) is
     # still per-bucket.
     stats = manifest.bucket_stats(pending)

@@ -2,11 +2,17 @@
 
 The north rule requires the job to checkpoint per-partition lineage and
 triple-count metrics to a manifest table and resume idempotently. Without an
-Iceberg catalog in the sandbox, the same contract is implemented over
-parquet with an atomic-rename commit per work unit; on a real deployment the
+Iceberg catalog, the same contract is implemented over parquet with an
+atomic-rename commit per work unit; on a real deployment the
 ``writeTo(...).append()`` path swaps in with the identical manifest schema
 (run_id, partition_id, input_rows, triples_out, errors, checksum, ts — the
 snapshot_id column then carries the Iceberg snapshot).
+
+The manifest's own I/O is driver-local Arrow, not one Spark job per row: a
+commit writes its one-row table with ``pyarrow.parquet.write_table`` to a temp
+file in ``manifest/`` and renames it to ``bucket_<b>.parquet`` (the rename is
+the commit point); resume reads those files with pyarrow. Spark keeps the data
+plane (triples, ``bucket_stats``) and ``read_manifest``.
 
 Resume = left-anti join of input work units against committed manifest rows:
 already-done units are skipped, so re-running after a failure appends only
@@ -24,12 +30,23 @@ import os
 import time
 from typing import Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = (
     "run_id string, partition_id int, input_rows long, triples_out long, "
     "errors long, checksum string, snapshot_id string, ts double"
+)
+
+# the Arrow mirror of MANIFEST_SCHEMA: same names, order and parquet types
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "double": pa.float64(),
+}
+MANIFEST_ARROW_SCHEMA = pa.schema(
+    [(n, _ARROW_TYPES[t]) for n, t in (f.split() for f in MANIFEST_SCHEMA.split(","))]
 )
 
 
@@ -49,16 +66,24 @@ class ParquetManifest:
         os.makedirs(self.manifest_dir, exist_ok=True)
         os.makedirs(self.triples_dir, exist_ok=True)
 
-    def committed_buckets(self) -> set[int]:
-        files = [
-            f for f in os.listdir(self.manifest_dir) if f.endswith(".parquet")
+    def _manifest_files(self) -> list[str]:
+        """Committed manifest rows: only renamed ``bucket_<b>.parquet``
+        files count — a temp file whose rename never happened does not."""
+        return [
+            os.path.join(self.manifest_dir, f)
+            for f in sorted(os.listdir(self.manifest_dir))
+            if f.startswith("bucket_") and f.endswith(".parquet")
         ]
+
+    def _read_column(self, name: str) -> list:
+        files = self._manifest_files()
         if not files:
-            return set()
-        df = self.spark.read.parquet(
-            *[os.path.join(self.manifest_dir, f) for f in files]
-        )
-        return {r.partition_id for r in df.select("partition_id").distinct().collect()}
+            return []
+        table = pq.read_table(files, columns=[name], schema=MANIFEST_ARROW_SCHEMA)
+        return table.column(name).to_pylist()
+
+    def committed_buckets(self) -> set[int]:
+        return set(self._read_column("partition_id"))
 
     def pending_buckets(self) -> list[int]:
         done = self.committed_buckets()
@@ -69,21 +94,9 @@ class ParquetManifest:
         any — a resumed run MUST re-read the same snapshot (north rule:
         resume idempotently from the last committed snapshot), so new
         appends between crash and resume don't leak into this run."""
-        files = [
-            os.path.join(self.manifest_dir, f)
-            for f in os.listdir(self.manifest_dir)
-            if f.endswith(".parquet")
-        ]
-        if not files:
-            return None
-        rows = (
-            self.spark.read.parquet(*files)
-            .where(F.col("snapshot_id").isNotNull())
-            .select("snapshot_id")
-            .limit(1)
-            .collect()
+        return next(
+            (s for s in self._read_column("snapshot_id") if s is not None), None
         )
-        return rows[0]["snapshot_id"] if rows else None
 
     def bucket_stats(self, buckets: list[int]) -> dict[int, dict]:
         """Per-bucket commit metrics (clean count, error count, checksum) in
@@ -154,7 +167,9 @@ class ParquetManifest:
         stats: Optional[dict],
         snapshot_id: Optional[str] = None,
     ) -> dict:
-        """Write the atomic manifest row for one completed bucket.
+        """Write the atomic manifest row for one completed bucket: a
+        one-row Arrow table to a temp file, then ``os.replace`` onto
+        ``bucket_<b>.parquet``.
 
         ``stats=None`` is the zero-output bucket: the dynamic-partition
         write created no directory for it (its conversations carry no
@@ -162,51 +177,25 @@ class ParquetManifest:
         completed unit of work that MUST commit, otherwise the warehouse
         would re-crash on the missing path at every resume
         (regression-pinned in test_pipeline_resume)."""
-        metrics = dict(
-            stats or {"triples_out": 0, "errors": 0, "checksum": "0"}
-        )
-        metrics["input_rows"] = input_rows
-        return self._write_manifest_row(run_id, bucket, metrics, snapshot_id)
-
-    def commit_written_bucket(
-        self,
-        run_id: str,
-        bucket: int,
-        input_rows: int,
-        snapshot_id: Optional[str] = None,
-    ) -> dict:
-        """Single-bucket convenience over :meth:`bucket_stats` +
-        :meth:`commit_bucket` (one metrics job, was three in round 2)."""
-        stats = self.bucket_stats([bucket]).get(bucket)
-        return self.commit_bucket(run_id, bucket, input_rows, stats, snapshot_id)
-
-    def _write_manifest_row(
-        self, run_id: str, bucket: int, metrics: dict,
-        snapshot_id: Optional[str],
-    ) -> dict:
         row = {
             "run_id": run_id,
             "partition_id": bucket,
+            "input_rows": input_rows,
+            **(stats or {"triples_out": 0, "errors": 0, "checksum": "0"}),
             "snapshot_id": None if snapshot_id is None else str(snapshot_id),
             "ts": time.time(),
-            **metrics,
         }
-        tmp = os.path.join(self.manifest_dir, f"_tmp_bucket_{bucket}")
-        final = os.path.join(self.manifest_dir, f"bucket_{bucket}.parquet")
-        self.spark.createDataFrame([row], schema=MANIFEST_SCHEMA).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
-        os.replace(os.path.join(tmp, part), final)
+        # the temp name neither starts with "bucket_" nor ends in ".parquet",
+        # so no reader counts it before the rename
+        tmp = os.path.join(self.manifest_dir, f"_tmp_bucket_{bucket}.inprogress")
+        pq.write_table(
+            pa.Table.from_pylist([row], schema=MANIFEST_ARROW_SCHEMA), tmp
+        )
+        os.replace(tmp, os.path.join(self.manifest_dir, f"bucket_{bucket}.parquet"))
         return row
 
     def read_triples(self) -> DataFrame:
         return self.spark.read.parquet(self.triples_dir)
 
     def read_manifest(self) -> DataFrame:
-        files = [
-            os.path.join(self.manifest_dir, f)
-            for f in os.listdir(self.manifest_dir)
-            if f.endswith(".parquet")
-        ]
-        return self.spark.read.parquet(*files)
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(*self._manifest_files())

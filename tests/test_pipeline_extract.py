@@ -72,6 +72,30 @@ def test_quarantine_on_malformed_doc(spark):
     ]
 
 
+@pytest.mark.parametrize("depth", [600, 2500])
+def test_quarantine_on_too_deep_doc(spark, depth):
+    """A document nested past the interpreter's stack overflows the
+    expansion walk (600 levels) or json.loads itself (2,500): it becomes
+    one quarantine row and the clean row next to it still extracts."""
+    deep = (
+        '{"@context": {"@vocab": "http://ex.org/"}, "a": '
+        + '{"a": ' * depth + '"x"' + "}" * (depth + 1)
+    )
+    rows = [
+        ("c1", 0, "ok", '{"@context": {"@vocab": "http://ex.org/"}, "a": "b"}'),
+        ("c1", 1, "ok", deep),
+    ]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string, tool string")
+    out = extract_triples(df).collect()
+    clean = [r for r in out if r.error_code is None]
+    assert [(r.turn_idx, r.pred, r.obj_value) for r in clean] == [
+        (0, "http://ex.org/a", "b")
+    ]
+    assert [(r.turn_idx, r.error_code) for r in out if r.error_code] == [
+        (1, "document too deep")
+    ]
+
+
 def test_per_turn_text_equality_invariant(spark, transcripts):
     """North-rule invariant: joining triples back to the input preserves
     per-turn text equality under stable (conv_id, turn_idx) ordering."""

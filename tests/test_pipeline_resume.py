@@ -1,11 +1,14 @@
 """Resume/idempotence + skew tests (FIXTURES.md §5.2-5.3, SURVEY.md §7 M2)."""
 
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from json_ld_spark.operators.skew import repartition_salted, salted_count
 from json_ld_spark.pipeline.job import run_extraction_job
-from json_ld_spark.pipeline.manifest import ParquetManifest
+from json_ld_spark.pipeline.manifest import MANIFEST_SCHEMA, ParquetManifest
 from json_ld_spark.pipeline.transcripts import synth_transcripts
 
 
@@ -84,6 +87,89 @@ def test_manifest_metrics(spark, sf_dir, tmp_path):
         F.col("error_code").isNull()
     ).count()
     assert all(r.checksum is not None for r in rows)
+
+
+def test_manifest_dir_holds_only_commits(spark, sf_dir, tmp_path):
+    """A commit leaves exactly its bucket_<b>.parquet behind: no temp
+    files or directories, no _SUCCESS or .crc side files."""
+    run_extraction_job(
+        spark, synth_transcripts(spark, sf_dir), str(tmp_path / "w"), 4
+    )
+    assert sorted(os.listdir(tmp_path / "w" / "manifest")) == [
+        f"bucket_{b}.parquet" for b in range(4)
+    ]
+
+
+def test_crash_between_write_and_rename_is_not_a_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A commit that dies after writing its temp file but before the
+    rename leaves that bucket pending, and no reader sees the temp row."""
+    m = ParquetManifest(spark, str(tmp_path / "w"), 4)
+    m.commit_bucket("r1", 0, 5, None, snapshot_id="7")
+
+    def crash(src, dst):
+        raise OSError("crash before rename")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", crash)
+        with pytest.raises(OSError, match="crash before rename"):
+            m.commit_bucket("r2", 1, 5, None, snapshot_id="99")
+    leftovers = set(os.listdir(m.manifest_dir)) - {"bucket_0.parquet"}
+    assert len(leftovers) == 1, "the crashed commit should leave its temp file"
+    assert m.pending_buckets() == [1, 2, 3]
+    assert m.pinned_snapshot() == "7"
+    assert [r.partition_id for r in m.read_manifest().collect()] == [0]
+
+    # the temp file alone pins nothing either
+    os.remove(os.path.join(m.manifest_dir, "bucket_0.parquet"))
+    assert m.pending_buckets() == [0, 1, 2, 3]
+    assert m.pinned_snapshot() is None
+
+
+def _recommit_with_spark_write(spark, m):
+    """Rewrite every committed manifest row the way commits were made
+    before they moved to Arrow: a one-row Spark write to a temp
+    directory, then a rename of its part file (the directory stays)."""
+    for path in m._manifest_files():
+        row = pq.read_table(path).to_pylist()[0]
+        os.remove(path)
+        tmp = os.path.join(m.manifest_dir, f"_tmp_bucket_{row['partition_id']}")
+        spark.createDataFrame([row], schema=MANIFEST_SCHEMA).coalesce(
+            1
+        ).write.mode("overwrite").parquet(tmp)
+        part = [f for f in os.listdir(tmp) if f.endswith(".parquet")][0]
+        os.replace(os.path.join(tmp, part), path)
+
+
+def test_resume_over_spark_written_commits(spark, sf_dir, tmp_path):
+    """A warehouse whose first commits were Spark-written resumes with
+    the Arrow commits: only the pending buckets run, and read_manifest
+    returns the old and the new rows under one schema."""
+    transcripts = synth_transcripts(spark, sf_dir).cache()
+    w = str(tmp_path / "w")
+    with pytest.raises(RuntimeError, match="fault injection"):
+        run_extraction_job(spark, transcripts, w, 4, fail_after_bucket=2)
+    m = ParquetManifest(spark, w, 4)
+    old_rows = {r.partition_id: r for r in m.read_manifest().collect()}
+    _recommit_with_spark_write(spark, m)
+    assert {r.partition_id: r for r in m.read_manifest().collect()} == old_rows
+    pending = m.pending_buckets()
+    assert len(pending) == 2
+
+    resumed = run_extraction_job(spark, transcripts, w, 4)
+    assert resumed.buckets_processed == 2
+    assert m.pending_buckets() == []
+    manifest = m.read_manifest()
+    schema = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    assert manifest.schema == schema
+    # the files agree on their own: inference from any of them gives it too
+    assert spark.read.parquet(*m._manifest_files()).schema == schema
+    rows = {r.partition_id: r for r in manifest.collect()}
+    assert sorted(rows) == [0, 1, 2, 3]
+    assert all(rows[b] == old_rows[b] for b in old_rows)
+    assert {rows[b].run_id for b in pending} != {r.run_id for r in old_rows.values()}
+    assert sum(r.input_rows for r in rows.values()) == transcripts.count()
 
 
 def test_hot_conv_skew_fixture(spark, sf_dir):

@@ -99,3 +99,31 @@ def test_edge_normal_form_job_budget(spark, helper):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def test_manifest_commit_and_resume_reads_run_no_spark_jobs(spark, tmp_path):
+    """The manifest's commits and resume reads are driver-local Arrow I/O:
+    on a manifest that already has rows, none of them launches a Spark
+    job."""
+    from json_ld_spark.pipeline.manifest import ParquetManifest
+
+    sc = spark.sparkContext
+    m = ParquetManifest(spark, str(tmp_path / "w"), 4)
+    m.commit_bucket("r0", 0, 3, None, snapshot_id="5")
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    stats = {"triples_out": 2, "errors": 1, "checksum": "9"}
+    assert jobs("manifest-commit", lambda: m.commit_bucket("r1", 1, 4, stats)) == 0
+    assert jobs("manifest-committed", m.committed_buckets) == 0
+    assert jobs("manifest-pending", m.pending_buckets) == 0
+    assert jobs("manifest-pinned", m.pinned_snapshot) == 0
+    assert (m.pending_buckets(), m.pinned_snapshot()) == ([2, 3], "5")
+    # the job-group probe itself counts: a Spark read of the rows is a job
+    assert jobs("manifest-read", lambda: m.read_manifest().collect()) >= 1

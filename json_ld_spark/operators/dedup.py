@@ -102,7 +102,7 @@ def minhash_lsh_pairs(
     10^9 docs one degenerate band (e.g. a boilerplate-dominated signature)
     is a job-killer. Buckets past the cap are dropped entirely; a bucket
     that large is a boilerplate cluster, not a near-dup candidate set worth
-    pairwise expansion (mirror of same_as_edges(max_block), entity.py). The
+    pairwise expansion (mirror of entity.MAX_BLOCK, pipeline/entity.py). The
     DuckDB oracle applies the identical cap.
     """
     assert n_hashes % n_bands == 0

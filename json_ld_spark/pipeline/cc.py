@@ -11,6 +11,13 @@ lexicographically-smallest member (the W2 canonical tie-break of SURVEY.md
 §2) without a global id-assignment step — a driver-side ``row_number`` over
 all nodes would be a single-partition bottleneck at 10^12 scale.
 
+Its caller is ``operators/training.neardup_clusters`` (the driver query
+``train_neardup_clusters``), whose MinHash pairs chain across documents.
+The entity layer does not need the loop: its same-as edges are disjoint
+per-block stars, so it labels each block with its minimum directly
+(``entity.block_canon``). ``simple_edges`` and ``undirected`` below are
+the graph operators' edge normal form.
+
 Scale notes:
 - Each iteration is join + groupBy().min(); lineage is cut with
   ``localCheckpoint`` every iteration so Catalyst's plan doesn't grow

@@ -1,7 +1,7 @@
 """Entity layer: mention detection, blocking, linking, canonicalization.
 
 SURVEY.md §2 operators U3 (mention detection), J1 (blocking join), J2/J3
-(connected components + canonical rewrite), producing the final ``nodes`` /
+(same-as components + canonical rewrite), producing the final ``nodes`` /
 ``edges`` tables of the KG (SURVEY.md §1.3).
 
 Design for 10^12 turns:
@@ -12,8 +12,10 @@ Design for 10^12 turns:
   magnitude smaller than mentions, so Spark broadcasts it (AQE also rescues
   misestimates). Hot blocks (hub entities) are bounded by a per-block
   candidate cap.
-- same-as edges → large-star/small-star CC (cc.py) → canonical ids applied
-  to triples with two equi-joins (subject side, object side).
+- Block-minimum labelling (``block_canon``, one groupBy + one join, no
+  CC loop) → canonical ids applied to triples with two equi-joins. Exact:
+  each entity has one block key and same-as edges link a block's members
+  to its minimum, so the components are the blocks, labelled by minimum.
 """
 
 from __future__ import annotations
@@ -28,7 +30,8 @@ from pyspark.sql.types import (
     IntegerType, StringType, StructField, StructType,
 )
 
-from .cc import connected_components
+# unused here: kept because tracing wraps entity.connected_components by name
+from .cc import connected_components  # noqa: F401
 
 MENTION_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -132,29 +135,83 @@ def link_mentions(mentions: DataFrame, entities: DataFrame) -> DataFrame:
     )
 
 
-def same_as_edges(entities: DataFrame, max_block: int = 64) -> DataFrame:
+# A block with more members than this is almost certainly a bad key, not
+# one entity: its members stay their own canon.
+MAX_BLOCK = 64
+
+
+def block_canon(entities: DataFrame) -> DataFrame:
+    """(iri, canon_id) for every row of the entity dictionary: the least
+    ``entity_iri`` of its ``block_key`` block (Spark's string ``min``, the
+    W2 tie-break), or the entity itself when the block has more than
+    ``MAX_BLOCK`` members. A singleton block is its own minimum, and an
+    entity with a null ``block_key`` is its own canon.
+
+    This is the connected-components labelling of the same-as graph
+    computed in one groupBy and one join: blocks are disjoint and each
+    block's same-as edges form one star rooted at its minimum.
+    """
+    blocks = entities.groupBy("block_key").agg(
+        F.min("entity_iri").alias("root"), F.count("*").alias("k")
+    )
+    return entities.join(blocks, "block_key", "left").select(
+        F.col("entity_iri").alias("iri"),
+        F.coalesce(
+            F.when(F.col("k") <= MAX_BLOCK, F.col("root")), F.col("entity_iri")
+        ).alias("canon_id"),
+    )
+
+
+def same_as_edges(entities: DataFrame) -> DataFrame:
     """Same-entity edges: IRIs sharing a blocking key are duplicates of one
     canonical entity (fixture semantics: ctx/base emits
     ``http://ex.org/d/person-N`` for the same entity as
     ``http://ex.org/person-N``).
 
-    Instead of an O(k²) pairwise self-join per block, each block links all
-    members to the block's lexicographic minimum — a star, which is exactly
-    what connected components needs, computed with one groupBy + one join.
-    ``max_block`` guards against degenerate giant blocks (a block bigger
-    than the cap is almost certainly a bad key, not one entity).
+    Each member links to its block's minimum (a star, not an O(k²)
+    self-join): the rows of ``block_canon`` whose canon is another entity.
     """
-    sized = entities.groupBy("block_key").agg(
-        F.min("entity_iri").alias("canon_candidate"),
-        F.count("*").alias("k"),
-    ).where((F.col("k") > 1) & (F.col("k") <= max_block))
     return (
-        entities.join(sized, "block_key")
-        .where(F.col("entity_iri") != F.col("canon_candidate"))
-        .select(
-            F.col("entity_iri").alias("src"),
-            F.col("canon_candidate").alias("dst"),
+        block_canon(entities)
+        .where(F.col("iri") != F.col("canon_id"))
+        .select(F.col("iri").alias("src"), F.col("canon_id").alias("dst"))
+    )
+
+
+def _nodes(canon_full: DataFrame) -> DataFrame:
+    """(canon_id, iri, kind, n_aliases) from the (iri, canon_id) table."""
+    return (
+        canon_full.groupBy("canon_id")
+        .agg(F.count("*").alias("n_aliases"), F.min("iri").alias("iri"))
+        .withColumn(
+            "kind",
+            F.when(F.col("canon_id").contains("person"), "person")
+            .when(F.col("canon_id").contains("event"), "event")
+            .when(F.col("canon_id").contains("org"), "org")
+            .otherwise("other"),
         )
+        .select("canon_id", "iri", "kind", "n_aliases")
+    )
+
+
+def _canon_edges(iri_triples: DataFrame, canon_full: DataFrame) -> DataFrame:
+    """J3 — (src_canon, pred, dst_canon, provenance): two equi-joins rewrite
+    subj and obj of IRI-object triples to canonical ids; RDF-namespace
+    predicates are left out."""
+    subj_map = canon_full.select(
+        F.col("iri").alias("subj"), F.col("canon_id").alias("src_canon")
+    )
+    obj_map = canon_full.select(
+        F.col("iri").alias("obj_value"), F.col("canon_id").alias("dst_canon")
+    )
+    return (
+        iri_triples.join(subj_map, "subj", "inner")
+        .join(obj_map, "obj_value", "inner")
+        .where(~F.col("pred").startswith(
+            "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
+        ))
+        .groupBy("src_canon", "pred", "dst_canon")
+        .agg(F.count("*").alias("provenance"))
     )
 
 
@@ -178,51 +235,11 @@ def canonicalize(
     if materialize:
         clean = clean.localCheckpoint()
     entities = entity_dictionary(clean).localCheckpoint()
-    edges0 = same_as_edges(entities)
-    canon_map = connected_components(edges0).localCheckpoint()
-    # entities without any same-as edge are their own canon
-    canon_full = (
-        entities.join(canon_map, entities.entity_iri == canon_map.id, "left")
-        .select(
-            F.col("entity_iri").alias("iri"),
-            F.coalesce("component", "entity_iri").alias("canon_id"),
-        )
-    )
-    nodes = (
-        canon_full.groupBy("canon_id")
-        .agg(
-            F.count("*").alias("n_aliases"),
-            F.min("iri").alias("iri"),
-        )
-        .withColumn(
-            "kind",
-            F.when(F.col("canon_id").contains("person"), "person")
-            .when(F.col("canon_id").contains("event"), "event")
-            .when(F.col("canon_id").contains("org"), "org")
-            .otherwise("other"),
-        )
-        .select("canon_id", "iri", "kind", "n_aliases")
-    )
-    # J3 — two equi-joins rewrite subj and obj to canonical ids
-    subj_map = canon_full.select(
-        F.col("iri").alias("subj"), F.col("canon_id").alias("src_canon")
-    )
-    obj_map = canon_full.select(
-        F.col("iri").alias("obj_value"), F.col("canon_id").alias("dst_canon")
-    )
-    rewritten = (
-        clean.where(F.col("obj_kind") == "iri")
-        .join(subj_map, "subj", "inner")
-        .join(obj_map, "obj_value", "inner")
-        .where(~F.col("pred").startswith("http://www.w3.org/1999/02/22-rdf-syntax-ns#"))
-    )
-    edges = (
-        rewritten.groupBy("src_canon", "pred", "dst_canon")
-        .agg(F.count("*").alias("provenance"))
-    )
+    canon_full = block_canon(entities).localCheckpoint()
+    edges = _canon_edges(clean.where(F.col("obj_kind") == "iri"), canon_full)
     return canon_full.select(
         F.col("iri").alias("id"), F.col("canon_id").alias("component")
-    ), nodes, edges
+    ), _nodes(canon_full), edges
 
 
 def incremental_canonicalize(
@@ -234,8 +251,8 @@ def incremental_canonicalize(
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
     """Incremental entity layer for snapshot appends: canonicalize ONLY the
     blocks a genuinely-new entity touches and rewrite ONLY the triples an
-    affected canon touches, instead of re-running CC + the two rewrite
-    joins over the whole corpus (``canonicalize``).
+    affected canon touches, instead of re-labelling every block + the two
+    rewrite joins over the whole corpus (``canonicalize``).
 
     Why this is exact (not an approximation): ``block_key`` is a pure
     function of the entity IRI and ``same_as_edges`` only links entities
@@ -247,10 +264,9 @@ def incremental_canonicalize(
     tests/test_pipeline_entity.py.
 
     At 10^12 turns this is the difference between an append costing
-    O(delta + affected blocks) and re-running the CC loop over 10^9
-    entities: the only full-corpus touches left are two semi-join-filtered
-    scans of the OLD triples (subj/obj membership in the changed-entity
-    set).
+    O(delta + affected blocks) and re-labelling all 10^9 entities: the
+    only full-corpus touches left are two semi-join-filtered scans of the
+    OLD triples (subj/obj membership in the changed-entity set).
 
     Join-strategy note: ``affected_keys`` (distinct block keys of the
     delta) is bounded by the delta and safely broadcast-hinted. The
@@ -279,16 +295,7 @@ def incremental_canonicalize(
     affected_entities = entities.join(
         F.broadcast(affected_keys), "block_key", "left_semi"
     )
-    comp = connected_components(same_as_edges(affected_entities))
-    canon_aff = (
-        affected_entities.join(
-            comp, affected_entities.entity_iri == comp.id, "left"
-        )
-        .select(
-            F.col("entity_iri").alias("iri"),
-            F.coalesce("component", "entity_iri").alias("canon_id"),
-        )
-    )
+    canon_aff = block_canon(affected_entities)
     canon_keep = prev_canon.join(
         F.broadcast(affected_keys),
         entity_local_name(F.col("iri")) == F.col("block_key"),
@@ -297,18 +304,7 @@ def incremental_canonicalize(
     canon_full = canon_keep.unionByName(canon_aff).localCheckpoint()
 
     # nodes: re-aggregate over the (entity-scale, triples-free) canon table
-    nodes = (
-        canon_full.groupBy("canon_id")
-        .agg(F.count("*").alias("n_aliases"), F.min("iri").alias("iri"))
-        .withColumn(
-            "kind",
-            F.when(F.col("canon_id").contains("person"), "person")
-            .when(F.col("canon_id").contains("event"), "event")
-            .when(F.col("canon_id").contains("org"), "org")
-            .otherwise("other"),
-        )
-        .select("canon_id", "iri", "kind", "n_aliases")
-    )
+    nodes = _nodes(canon_full)
 
     # edges: keep groups with both endpoints' canon unchanged; re-aggregate
     # every old triple touching a changed entity plus every new triple
@@ -329,13 +325,12 @@ def incremental_canonicalize(
     # CLOSURE over stale components: if any member of a previous component
     # changed canon, EVERY previous member's triples must re-aggregate —
     # including members whose own canon did not move. The dissolution case
-    # makes this load-bearing: an append pushing a block past
-    # same_as_edges(max_block) dissolves the component (no star edges →
-    # every member becomes its own canon), the old representative keeps its
-    # canon id verbatim, yet all its edge groups are dropped as stale
-    # (stale_canons contains the old representative's id) — without the
-    # closure its triples would never be re-aggregated and those edges
-    # would silently vanish vs the full recompute
+    # makes this load-bearing: an append pushing a block past MAX_BLOCK
+    # dissolves the component (every member becomes its own canon), the old
+    # representative keeps its canon id verbatim, yet all its edge groups
+    # are dropped as stale (stale_canons contains the old representative's
+    # id) — without the closure its triples would never be re-aggregated
+    # and those edges would silently vanish vs the full recompute
     # (tests/test_pipeline_entity.py::test_incremental_block_cap_dissolution).
     changed_iris = (
         changed.select("iri")
@@ -376,25 +371,8 @@ def incremental_canonicalize(
     recompute = touched_old.unionByName(
         clean_new.where(F.col("obj_kind") == "iri").select(*touched_old.columns)
     )
-    subj_map = canon_full.select(
-        F.col("iri").alias("subj"), F.col("canon_id").alias("src_canon")
-    )
-    obj_map = canon_full.select(
-        F.col("iri").alias("obj_value"), F.col("canon_id").alias("dst_canon")
-    )
-    redone = (
-        recompute.join(subj_map, "subj", "inner")
-        .join(obj_map, "obj_value", "inner")
-        .where(
-            ~F.col("pred").startswith(
-                "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
-            )
-        )
-        .groupBy("src_canon", "pred", "dst_canon")
-        .agg(F.count("*").alias("provenance"))
-    )
     edges = (
-        keep_edges.unionByName(redone)
+        keep_edges.unionByName(_canon_edges(recompute, canon_full))
         .groupBy("src_canon", "pred", "dst_canon")
         .agg(F.sum("provenance").alias("provenance"))
     )

@@ -21,6 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 from typing import Iterator, Mapping, Optional
@@ -93,6 +94,23 @@ def _quarantine(code: ErrorCode) -> tuple:
     return (None,) * 8 + (code.value,)
 
 
+# What makes the stats/framing/compaction kernels skip a document (their
+# quarantine path is extract_triples), at its two sites: parsing
+# (``JSONDecodeError`` is a ``ValueError``) and the JSON-LD algorithms. A
+# document nested deeper than the interpreter's stack raises
+# ``RecursionError`` at either site and must never abort the task.
+_UNPARSABLE = (ValueError, RecursionError)
+_UNPROCESSABLE = (JsonLdError, RecursionError)
+
+
+def _md5_json(obj) -> str:
+    """md5 of the canonical JSON of ``obj``: the bit-exact output pin the
+    golden oracles of the framing and compaction kernels compare."""
+    return hashlib.md5(
+        json.dumps(obj, sort_keys=True, separators=(",", ":")).encode()
+    ).hexdigest()
+
+
 class TurnExpander:
     """Per-worker expansion kernel with context-compile and document memo
     caches.
@@ -140,6 +158,19 @@ class TurnExpander:
             self.cache_stats["ctx_hits"] += 1
         return ctx
 
+    def expand_parsed(self, doc) -> tuple[Context, list]:
+        """(active context, expanded form) of one parsed document: its own
+        ``@context`` (compiled once, memoized) or the document IRI as base.
+        Raises ``JsonLdError``, or ``RecursionError`` on a document nested
+        past the interpreter's stack."""
+        ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
+        if ctx_value is None:
+            active = Context(base=self.document_iri)
+            return active, expand_document(self.processor, active, doc)
+        active = self._active_context(ctx_value)
+        body = {k: v for k, v in doc.items() if k != "@context"}
+        return active, expand_document(self.processor, active, body)
+
     def _expand_doc(self, raw: str) -> tuple[tuple, ...]:
         """Expand one raw document string to partial rows (everything after
         the conv_id/turn_idx prefix), memoized on the raw string."""
@@ -162,14 +193,7 @@ class TurnExpander:
             out.append(_quarantine(ErrorCode.DOCUMENT_TOO_DEEP))
         if doc is not None:
             try:
-                ctx_value = doc.get("@context") if isinstance(doc, Mapping) else None
-                if ctx_value is not None:
-                    active = self._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=self.document_iri)
-                    body = doc
-                expanded = expand_document(self.processor, active, body)
+                _, expanded = self.expand_parsed(doc)
                 for t in expanded_to_triples(expanded):
                     out.append(
                         (t["subj"], t["pred"], t["obj_kind"], t["obj_value"],
@@ -218,7 +242,7 @@ def flatten_turn_stats(
     plan shape as extract_triples (candidate filter JVM-side, 4-column
     pruning, map-only); docs that fail to parse/expand are skipped, the
     quarantine path being extract_triples' job."""
-    from ..kernel import expand_document, flatten_expanded, flatten_stats
+    from ..kernel import flatten_expanded, flatten_stats
 
     contexts = contexts or ContextDict()
     bc = transcripts.sparkSession.sparkContext.broadcast(
@@ -235,22 +259,12 @@ def flatten_turn_stats(
         def doc_stats(raw: str):
             try:
                 doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
+            except _UNPARSABLE:
                 return None
             try:
-                ctx_value = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_value is not None:
-                    active = expander._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                flat = flatten_expanded(
-                    expand_document(expander.processor, active, body)
-                )
-            except JsonLdError:
+                _, expanded = expander.expand_parsed(doc)
+                flat = flatten_expanded(expanded)
+            except _UNPROCESSABLE:
                 return None
             return flatten_stats(flat)
 
@@ -462,8 +476,6 @@ def frame_turn_entities(
     shape as extract_triples: candidate filter JVM-side, 4-column pruning,
     map-only; failing docs are skipped (quarantine is extract_triples'
     job)."""
-    import hashlib
-
     from ..kernel import frame_expanded
 
     frame = frame or DEFAULT_TURN_FRAME
@@ -479,25 +491,21 @@ def frame_turn_entities(
         raw_contexts, document_iri, frame_obj = bc.value
         expander = TurnExpander(raw_contexts, document_iri)
 
-        def frame_doc(raw: str):
+        def frame_doc(raw: str) -> list[tuple]:
+            """(root_id, n_props, n_embedded, frame_fp) per framed root."""
             try:
                 doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
+            except _UNPARSABLE:
                 return []
             try:
-                ctx_value = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_value is not None:
-                    active = expander._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                expanded = expand_document(expander.processor, active, body)
-                return frame_expanded(expanded, frame_obj)
-            except JsonLdError:
+                _, expanded = expander.expand_parsed(doc)
+                roots = frame_expanded(expanded, frame_obj)
+            except _UNPROCESSABLE:
                 return []
+            return [
+                (root["@id"], *_framed_node_stats(root), _md5_json(root))
+                for root in roots
+            ]
 
         for pdf in batches:
             rows = []
@@ -505,17 +513,10 @@ def frame_turn_entities(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
             ):
                 for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
-                    for root in frame_doc(raw):
-                        n_props, n_embedded = _framed_node_stats(root)
-                        fp = hashlib.md5(
-                            json.dumps(
-                                root, sort_keys=True, separators=(",", ":")
-                            ).encode()
-                        ).hexdigest()
-                        rows.append(
-                            (conv_id, int(turn_idx), doc_idx, root["@id"],
-                             n_props, n_embedded, fp)
-                        )
+                    rows.extend(
+                        (conv_id, int(turn_idx), doc_idx, *r)
+                        for r in frame_doc(raw)
+                    )
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -567,8 +568,6 @@ def frame_compact_turn_entities(
     and an md5 fingerprint of the canonical compacted JSON — a bit-exact
     pin of the whole §4.1 output shape for the golden oracle. Same
     Arrow-batched map-only plan as frame_turn_entities."""
-    import hashlib
-
     from ..kernel import (
         cleanup_null_markers,
         compact_document,
@@ -599,29 +598,26 @@ def frame_compact_turn_entities(
             expander.processor, frame_ctx, frame_obj
         )
 
-        def frame_doc(raw: str):
+        def frame_doc(raw: str) -> list[tuple]:
+            """(root_id, n_keys, n_null, compact_fp) per framed root."""
             try:
                 doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
+            except _UNPARSABLE:
                 return []
             try:
-                ctx_val = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_val is not None:
-                    active = expander._active_context(ctx_val)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                expanded = expand_document(expander.processor, active, body)
+                _, expanded = expander.expand_parsed(doc)
                 framed = frame_expanded(expanded, expanded_frame)
                 compacted = compact_document(frame_ctx, framed)
                 if not isinstance(compacted, list):
                     compacted = [compacted]
-                return [cleanup_null_markers(n) for n in compacted]
-            except JsonLdError:
+                roots = [cleanup_null_markers(n) for n in compacted]
+            except _UNPROCESSABLE:
                 return []
+            return [
+                (root.get("@id", ""), len(root),
+                 sum(1 for v in root.values() if v is None), _md5_json(root))
+                for root in roots
+            ]
 
         for pdf in batches:
             rows = []
@@ -629,17 +625,10 @@ def frame_compact_turn_entities(
                 pdf["conv_id"], pdf["turn_idx"], pdf["text"], pdf["tool"]
             ):
                 for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
-                    for root in frame_doc(raw):
-                        n_null = sum(1 for v in root.values() if v is None)
-                        fp = hashlib.md5(
-                            json.dumps(
-                                root, sort_keys=True, separators=(",", ":")
-                            ).encode()
-                        ).hexdigest()
-                        rows.append(
-                            (conv_id, int(turn_idx), doc_idx,
-                             root.get("@id", ""), len(root), n_null, fp)
-                        )
+                    rows.extend(
+                        (conv_id, int(turn_idx), doc_idx, *r)
+                        for r in frame_doc(raw)
+                    )
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -708,8 +697,6 @@ def compact_turn_docs(
     context-compile cache; failing docs are skipped (quarantine is
     extract_triples' job).
     """
-    import hashlib
-
     from ..kernel import compact_document, normalize_expanded
 
     contexts = contexts or ContextDict()
@@ -725,21 +712,14 @@ def compact_turn_docs(
         expander = TurnExpander(raw_contexts, document_iri)
 
         def compact_doc(raw: str):
+            """(n_keys, n_term_keys, n_iri_keys, roundtrip_ok, compact_fp),
+            or None for a skipped document."""
             try:
                 doc = json.loads(raw)
-            except (json.JSONDecodeError, ValueError):
+            except _UNPARSABLE:
                 return None
             try:
-                ctx_value = (
-                    doc.get("@context") if isinstance(doc, Mapping) else None
-                )
-                if ctx_value is not None:
-                    active = expander._active_context(ctx_value)
-                    body = {k: v for k, v in doc.items() if k != "@context"}
-                else:
-                    active = Context(base=document_iri)
-                    body = doc
-                expanded = expand_document(expander.processor, active, body)
+                active, expanded = expander.expand_parsed(doc)
                 # compactToRelative=False (spec option, default true): the
                 # pipeline publishes absolute subject/object IRIs so
                 # consumers join without needing the producer's base
@@ -752,9 +732,10 @@ def compact_turn_docs(
                 rt = normalize_expanded(reexpanded) == normalize_expanded(
                     expanded
                 )
-                return compacted, 1 if rt else 0
-            except JsonLdError:
+            except _UNPROCESSABLE:
                 return None
+            return (*_compacted_doc_stats(compacted), 1 if rt else 0,
+                    _md5_json(compacted))
 
         for pdf in batches:
             rows = []
@@ -763,19 +744,8 @@ def compact_turn_docs(
             ):
                 for doc_idx, raw in enumerate(iter_turn_documents(text, tool)):
                     out = compact_doc(raw)
-                    if out is None:
-                        continue
-                    compacted, rt = out
-                    n_keys, n_terms, n_iris = _compacted_doc_stats(compacted)
-                    fp = hashlib.md5(
-                        json.dumps(
-                            compacted, sort_keys=True, separators=(",", ":")
-                        ).encode()
-                    ).hexdigest()
-                    rows.append(
-                        (conv_id, int(turn_idx), doc_idx,
-                         n_keys, n_terms, n_iris, rt, fp)
-                    )
+                    if out is not None:
+                        rows.append((conv_id, int(turn_idx), doc_idx, *out))
             yield pd.DataFrame(
                 rows,
                 columns=[

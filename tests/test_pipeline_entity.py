@@ -5,9 +5,12 @@ from pyspark.sql import functions as F
 
 from json_ld_spark.pipeline.cc import connected_components
 from json_ld_spark.pipeline.entity import (
+    MAX_BLOCK,
+    block_canon,
     canonicalize,
     detect_mentions,
     entity_dictionary,
+    entity_local_name,
     link_mentions,
     same_as_edges,
 )
@@ -44,6 +47,49 @@ def test_connected_components_raises_when_not_converged(spark):
     edges = spark.createDataFrame(list(zip(ids, ids[1:])), "src string, dst string")
     with pytest.raises(RuntimeError, match="did not converge within 5 rounds"):
         connected_components(edges, max_iterations=5)
+
+
+def test_block_canon_equals_connected_components(spark):
+    """The block-minimum labelling equals connected components over the
+    same-as stars, with every entity outside a star its own canon — on a
+    singleton block, a pair, blocks of exactly MAX_BLOCK and MAX_BLOCK + 1
+    members (the latter dissolves), the empty block key of IRIs ending in
+    ``/``, and non-ASCII IRIs whose least member is Spark's string ``min``
+    (UTF-8 byte order, which is code-point order, not Java's UTF-16 order:
+    U+1F600 sorts after U+FFFD)."""
+    assert MAX_BLOCK == 64
+    iris = (
+        ["http://ex.org/solo-1"]
+        + ["http://ex.org/pair-2", "http://ex.org/d/pair-2"]
+        + [f"http://ex.org/{i:02d}/cap-64" for i in range(64)]
+        + [f"http://ex.org/{i:02d}/over-65" for i in range(65)]
+        + ["http://ex.org/x/", "http://ex.org/y/", "http://ex.org/a/b/"]
+        + [f"http://ex.org/{c}/näme-é" for c in ("\U0001F600", "\uFFFD")]
+        + [f"http://ex.org/{c}/ü-1" for c in ("Ω", "\U0001F600", "é")]
+    )
+    entities = (
+        spark.createDataFrame([(i,) for i in iris], "entity_iri string")
+        .withColumn("block_key", entity_local_name(F.col("entity_iri")))
+        .localCheckpoint()
+    )
+    comp = connected_components(same_as_edges(entities))
+    loop = entities.join(comp, entities.entity_iri == comp.id, "left").select(
+        F.col("entity_iri").alias("iri"),
+        F.coalesce("component", "entity_iri").alias("canon_id"),
+    )
+    got = dict(tuple(r) for r in block_canon(entities).collect())
+    assert sorted(got.items()) == sorted(tuple(r) for r in loop.collect())
+    assert len(got) == len(iris)
+    assert got["http://ex.org/solo-1"] == "http://ex.org/solo-1"
+    assert got["http://ex.org/pair-2"] == "http://ex.org/d/pair-2"
+    assert {got[i] for i in iris if i.endswith("cap-64")} == {
+        "http://ex.org/00/cap-64"
+    }
+    assert all(got[i] == i for i in iris if i.endswith("over-65"))
+    for key, least in (("näme-é", "\uFFFD"), ("ü-1", "é")):
+        block = [i for i in iris if i.endswith("/" + key)]
+        assert {got[i] for i in block} == {f"http://ex.org/{least}/{key}"}
+        assert min(block) == f"http://ex.org/{least}/{key}"
 
 
 @pytest.fixture(scope="module")
@@ -309,7 +355,7 @@ def test_incremental_no_forced_broadcast(spark, sf_dir):
 
 def test_incremental_block_cap_dissolution(spark):
     """The self-review catch: an append pushing a block past
-    same_as_edges(max_block) DISSOLVES the component (no star edges → every
+    entity.MAX_BLOCK DISSOLVES the component (no star edges → every
     member its own canon). The old representative keeps its canon id
     verbatim, yet all its edge groups are stale — without the closure over
     stale components its triples (and triples POINTING at it) would never

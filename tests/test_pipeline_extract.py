@@ -96,6 +96,48 @@ def test_quarantine_on_too_deep_doc(spark, depth):
     ]
 
 
+@pytest.mark.parametrize("depth", [600, 2500])
+@pytest.mark.parametrize(
+    "kernel",
+    [
+        "flatten_turn_stats",
+        "frame_turn_entities",
+        "frame_compact_turn_entities",
+        "compact_turn_docs",
+    ],
+)
+def test_document_kernels_skip_too_deep_doc(spark, kernel, depth):
+    """The stats, framing and compaction kernels skip a document nested
+    past the interpreter's stack instead of aborting the task: the clean
+    turn next to it yields exactly what it yields alone, and the deep turn
+    yields no row (flatten_turn_stats: a row that counts zero docs)."""
+    from json_ld_spark.pipeline import extract
+
+    clean = (
+        '{"@context": {"@vocab": "http://schema.org/"}, '
+        '"@id": "http://ex.org/p1", "name": "Ann", "jobTitle": "Chef"}'
+    )
+    deep = (
+        '{"@context": {"@vocab": "http://ex.org/"}, "a": '
+        + '{"a": ' * depth + '"x"' + "}" * (depth + 1)
+    )
+    schema = "conv_id string, turn_idx int, text string, tool string"
+    run = getattr(extract, kernel)
+    alone = run(spark.createDataFrame([("c1", 0, "ok", clean)], schema)).collect()
+    out = run(
+        spark.createDataFrame(
+            [("c1", 0, "ok", clean), ("c1", 1, "ok", deep)], schema
+        )
+    ).collect()
+    assert alone
+    assert [r for r in out if r.turn_idx == 0] == alone
+    deep_rows = [r for r in out if r.turn_idx == 1]
+    if kernel == "flatten_turn_stats":
+        assert [r.n_docs for r in deep_rows] == [0]
+    else:
+        assert deep_rows == []
+
+
 def test_per_turn_text_equality_invariant(spark, transcripts):
     """North-rule invariant: joining triples back to the input preserves
     per-turn text equality under stable (conv_id, turn_idx) ordering."""

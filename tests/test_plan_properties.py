@@ -101,6 +101,45 @@ def test_edge_normal_form_job_budget(spark, helper):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
+def test_canonicalize_job_budget(spark, tmp_path, monkeypatch):
+    """The entity layer labels canonical ids with one groupBy and one join
+    per pass (block minimum), not the connected-components loop: the loop
+    is made to raise, and canonicalize plus a count of nodes and of edges
+    over a materialized triples table runs 13 Spark jobs (41 when the
+    labels came from the loop)."""
+    from json_ld_spark.pipeline import entity
+    from json_ld_spark.pipeline.extract import TRIPLE_SCHEMA
+
+    def loop(*_args, **_kwargs):
+        raise AssertionError("connected_components is on the entity path")
+
+    monkeypatch.setattr(entity, "connected_components", loop)
+
+    def t(subj, obj):
+        return ("c", 0, subj, "http://ex.org/knows", "iri", obj,
+                None, None, None, None, None)
+
+    rows = [
+        t("http://ex.org/person-1", "http://ex.org/d/person-2"),
+        t("http://ex.org/d/person-1", "http://ex.org/person-3"),
+        t("http://ex.org/person-2", "http://ex.org/event-9"),
+    ]
+    path = str(tmp_path / "triples")
+    spark.createDataFrame(rows, TRIPLE_SCHEMA).write.parquet(path)
+    triples = spark.read.parquet(path)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("canonicalize-budget", "canonicalize")
+    try:
+        _, nodes, edges = entity.canonicalize(triples)
+        counts = (nodes.count(), edges.count())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == (4, 3)
+    jobs = sc.statusTracker().getJobIdsForGroup("canonicalize-budget")
+    assert len(jobs) == 13, len(jobs)
+
+
 def test_manifest_commit_and_resume_reads_run_no_spark_jobs(spark, tmp_path):
     """The manifest's commits and resume reads are driver-local Arrow I/O:
     on a manifest that already has rows, none of them launches a Spark
